@@ -10,7 +10,7 @@ Architecture invariants (the whole point of this engine vs the reference):
   * DataFrame/SQL logical plans everywhere — Catalyst plans, Tungsten runs.
   * Python only in Arrow-batched pandas UDFs — never per-row Python.
   * Explicit partitioning/salting on skewed keys; broadcast for small dims.
-  * Every pipeline stage checkpoints to parquet with per-partition lineage,
+  * Every pipeline stage checkpoints to parquet with per-write-task lineage,
     giving exact resume after failure.
 """
 

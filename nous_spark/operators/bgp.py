@@ -40,6 +40,18 @@ def _is_var(term: str) -> bool:
     return isinstance(term, str) and term.startswith("?")
 
 
+def _sql_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_str(term) -> str:
+    """A literal pattern term as a Spark SQL string literal (backslash
+    escapes, Spark's default parser setting)."""
+    if not isinstance(term, str):
+        raise TypeError(f"literal pattern terms must be strings, got {term!r}")
+    return "'" + term.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def _expr_vars(expr: str, known: frozenset[str]) -> frozenset[str]:
     """Variable names a FILTER expression references: every identifier
     token that is a declared pattern variable. A variable name that
@@ -129,16 +141,20 @@ def match_pattern(
     for pat in patterns:
         if len(pat) != 3:
             raise ValueError(f"pattern must be a 3-tuple, got {pat!r}")
-        df = triples
+        # One where (the AND of every term condition) and one select per
+        # scan, each given as SQL text: every classic-PySpark DataFrame
+        # call re-analyzes the plan, and every Column expression built
+        # in Python is one more Py4J round trip.
+        conds = []
         n_bound = 0
         var_at: dict[str, list[str]] = {}
         for pos, term in zip(_POS, pat):
-            c = cols[pos]
+            c = _sql_ident(cols[pos])
             if _is_var(term):
                 var_at.setdefault(term[1:], []).append(c)
-                df = df.where(F.col(c).isNotNull())
+                conds.append(f"{c} IS NOT NULL")
             else:
-                df = df.where(F.col(c) == F.lit(term))
+                conds.append(f"{c} = {_sql_str(term)}")
                 n_bound += 1
         if not var_at:
             # Fully bound pattern: keep it as an existence filter by
@@ -151,11 +167,10 @@ def match_pattern(
             )
         sel = []
         for v, at in var_at.items():
-            if len(at) > 1:  # same variable twice in one pattern
-                for a, b in zip(at, at[1:]):
-                    df = df.where(F.col(a) == F.col(b))
-            sel.append(F.col(at[0]).alias(v))
-        scan_df = df.select(*sel)
+            # same variable twice in one pattern: components must be equal
+            conds += [f"{a} = {b}" for a, b in zip(at, at[1:])]
+            sel.append(f"{at[0]} AS {_sql_ident(v)}")
+        scan_df = triples.where(" AND ".join(conds)).selectExpr(*sel)
         # scan-level FILTER pushdown: applied at EVERY scan binding all
         # of a filter's variables (a shared variable narrows each side)
         for k, (fexpr, vs) in enumerate(pend):

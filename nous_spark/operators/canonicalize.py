@@ -9,7 +9,8 @@ canonicalization over an alias-edge DataFrame; we build the edges from
   * entity-linking results (mention → linked entity)
   * code-graph short-name edges (callee name → fully-qualified def)
 
-run hash-to-min CC, and rewrite subj/obj through the resulting mapping.
+run connected components (on the driver up to a size cap, hash-to-min
+above it), and rewrite subj/obj through the resulting mapping.
 Head-entity skew (a name linked from everywhere) is handled by salting the
 rewrite join key — see ``materialize.write_triples``.
 """
@@ -20,7 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nous_spark.localrel import local_df
-from nous_spark.operators.graph import connected_components
+from nous_spark.operators.graph import (
+    connected_components,
+    min_rank_components,
+)
 
 SAMEAS_PREDICATES = ["owl:sameas", "sameas", "rdfs:label", "skos:preflabel",
                      "ispreferredmeaningof"]
@@ -83,11 +87,32 @@ def alias_edges_from_code(triples: DataFrame, docs: DataFrame | None = None) -> 
     return resolved.select(F.col("callee").alias("a"), F.col("fq").alias("b"))
 
 
-def canonical_mapping(alias_edges: DataFrame) -> DataFrame:
-    """label → canonical_label via hash-to-min connected components.
-    Canonical representative = longest label in the component (ties →
-    lexicographically smallest): fully-qualified names beat short names,
-    full names beat aliases. Deterministic → resume-stable."""
+def canonical_mapping(
+    alias_edges: DataFrame, driver_edge_cap: int = 16_000_000
+) -> DataFrame:
+    """label → canonical_label via connected components over the alias
+    edges. Canonical representative = longest label in the component
+    (ties → lexicographically smallest): fully-qualified names beat
+    short names, full names beat aliases. Deterministic → resume-stable.
+
+    The edge plan (triples ⋈ docs, calls ⋈ defs, an aggregate) is
+    evaluated ONCE: a bounded Arrow collect of at most
+    ``driver_edge_cap + 1`` edges. Up to the cap, components and
+    representatives are computed on the driver (``min_rank_components``,
+    the kernel of ``connected_components``' own driver path) and the
+    mapping comes back as an Arrow-backed local relation, so the
+    mapping write and ``rewrite_triples`` read it instead of
+    re-evaluating the edges. Python ``str`` order is code-point order,
+    which is Spark's UTF-8 byte order, and ``len`` counts code points
+    like ``F.length`` — so the representative is the distributed
+    path's. Edges with a NULL endpoint carry no alias (``canonicalize``
+    filters them). Above the cap (or with ``driver_edge_cap=0``) the
+    distributed hash-to-min path runs, as ``connected_components``
+    splits by size (parity pinned by tests)."""
+    if driver_edge_cap > 0:
+        tbl = alias_edges.select("a", "b").limit(driver_edge_cap + 1).toArrow()
+        if tbl.num_rows <= driver_edge_cap:
+            return _driver_mapping(alias_edges.sparkSession, tbl)
     ids = (
         alias_edges.select(F.col("a").alias("label"))
         .unionAll(alias_edges.select(F.col("b").alias("label")))
@@ -113,6 +138,34 @@ def canonical_mapping(alias_edges: DataFrame) -> DataFrame:
         .select("label", "canonical_label",
                 F.xxhash64("canonical_label").alias("canonical_id"))
     )
+
+
+def _driver_mapping(spark: SparkSession, tbl) -> DataFrame:
+    """``canonical_mapping`` over a collected (a, b) Arrow table."""
+    import numpy as np
+
+    tbl = tbl.drop_null()
+    a = tbl.column("a").to_numpy(zero_copy_only=False)
+    b = tbl.column("b").to_numpy(zero_copy_only=False)
+    # sorted label universe: rank order == label order, so the min rank
+    # among the longest labels is the lexicographically smallest one
+    uniq = np.unique(np.concatenate([a, b]))
+    comp = min_rank_components(
+        np.searchsorted(uniq, a), np.searchsorted(uniq, b), len(uniq)
+    )
+    neg_len = -np.fromiter((len(x) for x in uniq), dtype=np.int64,
+                           count=len(uniq))
+    # per component, first in (component, -length, rank) order
+    order = np.lexsort((np.arange(len(uniq)), neg_len, comp))
+    comp_o = comp[order]
+    first = np.ones(len(order), dtype=bool)
+    first[1:] = comp_o[1:] != comp_o[:-1]
+    rep = np.empty(len(uniq), dtype=np.int64)
+    rep[comp_o[first]] = order[first]
+    mapping = local_df(spark, zip(uniq, uniq[rep[comp]]),
+                       "label string, canonical_label string")
+    return mapping.select("label", "canonical_label",
+                          F.xxhash64("canonical_label").alias("canonical_id"))
 
 
 def rewrite_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:

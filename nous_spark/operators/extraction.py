@@ -216,11 +216,22 @@ def extract_triples_normalized(
     if "doc_id" not in df.columns:
         df = with_doc_id(df)
     docs = df.select("doc_id", "repo", "path", "commit", "lang", "content_sha")
-    triples = df.mapInArrow(
+    return narrow_triples(df, fancy, code_mode, coref), docs
+
+
+def narrow_triples(
+    df: DataFrame,
+    fancy: bool = False,
+    code_mode: bool = True,
+    coref: bool = False,
+) -> DataFrame:
+    """The triples of ``extract_triples_normalized`` over a frame that
+    already carries ``doc_id``, as it arrives (no spreading): for
+    callers that partition and cache the source themselves."""
+    return df.mapInArrow(
         lambda it: _narrow_batches(it, fancy, code_mode, coref),
         schema=NARROW_TRIPLE_SCHEMA,
     )
-    return triples, docs
 
 
 def type_triples(triples: DataFrame) -> DataFrame:

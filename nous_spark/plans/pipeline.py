@@ -3,7 +3,7 @@
     source table (repo, path, commit, lang, content)
       → [extract]      narrow triples + docs sidecar  (mapInArrow, no shuffle)
       → [link]         mention → entity per batch     (blocked join + per-doc solve)
-      → [canonicalize] alias collapse, global         (hash-to-min CC)
+      → [canonicalize] alias collapse, global         (driver CC ≤ cap, else hash-to-min)
       → [materialize]  triples partitionBy(pred) + salt; docs table alongside
 
 Provenance is NORMALIZED: every triple carries a 64-bit doc_id; one docs
@@ -14,15 +14,25 @@ hundreds (BASELINE.md BENCH quantifies ~4-5× on write volume).
 
 Batching: batch_id = pmod(xxhash64(repo, path), n_batches) — deterministic,
 so resume recomputes identical batches. Every stage goes through
-StateStore.run_stage (checkpoint + per-partition lineage + sha invariant),
-so a killed run resumes exactly and produces identical output
-(tests/test_pipeline_resume.py + a process-level kill -9 check).
+StateStore.run_stage (checkpoint + per-write-task lineage from the parquet
+footers + sha invariant), so a killed run resumes exactly and produces
+identical output (tests/test_pipeline_resume.py,
+tests/test_canonical_pipeline.py + a process-level kill -9 check).
+``rows_in`` is lazy: a resumed stage runs no count, and extract,
+canonicalize and materialize read it from the upstream stage's lineage
+``rows_out``. Each invariant check is one aggregate query.
+
+Canonicalize evaluates the alias-edge plan once: ``canonical_mapping``
+collects at most ``driver_edge_cap + 1`` edges with one Arrow collect and,
+at or below the cap, computes the mapping on the driver; the mapping
+write and the triple rewrite then read that small local relation. At this
+size the exchange is the cost, so the plan is chosen by input size.
 
 Scale notes: extraction is embarrassingly parallel per input split; the
-only global barriers are the CC fixpoint (bounded rounds, one shuffle each)
-and the final write. At 10^12 files n_batches becomes date/prefix
-partitions of the Iceberg table instead of a hash — the protocol is
-unchanged.
+only global barriers are the CC fixpoint above the driver cap (bounded
+rounds, one shuffle each) and the final write. At 10^12 files n_batches
+becomes date/prefix partitions of the Iceberg table instead of a hash —
+the protocol is unchanged.
 """
 
 from __future__ import annotations
@@ -32,7 +42,7 @@ from pyspark.sql import functions as F
 
 from nous_spark.operators.canonicalize import canonicalize
 from nous_spark.operators.extraction import (
-    extract_triples_normalized,
+    narrow_triples,
     with_content_sha,
     with_doc_id,
 )
@@ -44,19 +54,18 @@ SALT_BUCKETS = 64
 
 def _docs_sha_check(source_sha: DataFrame):
     """Checker for the docs sidecar: every (repo, path) carries exactly the
-    source's sha256(content)."""
+    source's sha256(content). One aggregate query."""
 
     def check(out: DataFrame) -> bool:
-        got = out.select("repo", "path", "content_sha").distinct()
         bad = (
-            got.join(source_sha, ["repo", "path"], "left")
-            .filter(
+            out.select("repo", "path", "content_sha")
+            .join(source_sha, ["repo", "path"], "left")
+            .agg(F.count_if(
                 F.col("content_sha").isNull()
                 | F.col("src_sha").isNull()  # docs row with no source row
                 | (F.col("content_sha") != F.col("src_sha"))
-            )
-            .limit(1)
-            .count()
+            ).alias("bad"))
+            .first()["bad"]
         )
         return bad == 0
 
@@ -65,14 +74,14 @@ def _docs_sha_check(source_sha: DataFrame):
 
 def _triples_doc_check(docs: DataFrame):
     """Checker for triple stages: every doc_id must resolve to a docs row
-    (the invariant carrier) — no orphan provenance."""
+    (the invariant carrier) — no orphan provenance. One aggregate query."""
 
     def check(out: DataFrame) -> bool:
         orphans = (
-            out.select("doc_id").distinct()
+            out.select("doc_id")
             .join(docs.select("doc_id"), "doc_id", "left_anti")
-            .limit(1)
-            .count()
+            .agg(F.count(F.lit(1)).alias("n"))
+            .first()["n"]
         )
         return orphans == 0
 
@@ -90,6 +99,13 @@ def run_pipeline(
     """Run (or resume) the full pipeline; returns the canonical triple DF
     (narrow: subj, pred, obj, conf, kind, doc_id, salt)."""
     store = StateStore(spark, out_root)
+    # Spread a source with fewer scan files than cores before the sha256
+    # and the extraction. The cache below is the barrier that keeps the
+    # spread, so the per-batch extraction needs no checkpointed copy of
+    # its own (it would outlive the run).
+    par = spark.sparkContext.defaultParallelism
+    if len(source.inputFiles()) < par:
+        source = source.repartition(par)
     src = with_doc_id(with_content_sha(source)).withColumn(
         "batch_id", F.pmod(F.xxhash64("repo", "path"), F.lit(n_batches)).cast("int")
     )
@@ -97,7 +113,17 @@ def run_pipeline(
     source_sha = src.select(
         "repo", "path", F.col("content_sha").alias("src_sha")
     ).persist()
+    try:
+        return _run(store, src, source_sha, n_batches, fancy, link)
+    finally:
+        # dependent cache first: uncaching src while source_sha (built on
+        # it) is still cached makes Spark re-cache source_sha
+        source_sha.unpersist()
+        src.unpersist()
 
+
+def _run(store: StateStore, src: DataFrame, source_sha: DataFrame,
+         n_batches: int, fancy: bool, link: bool) -> DataFrame:
     # -------- stage 1+2 per batch: docs sidecar, extract, link
     for b in range(n_batches):
         batch = src.filter(F.col("batch_id") == b).drop("batch_id")
@@ -107,14 +133,14 @@ def run_pipeline(
             lambda batch=batch: batch.select(
                 "doc_id", "repo", "path", "commit", "lang", "content_sha"
             ),
-            rows_in=batch.count(),
+            rows_in=batch.count,
             sha_check=_docs_sha_check(source_sha),
         )
         triples = store.run_stage(
             "extract",
             b,
-            lambda batch=batch: extract_triples_normalized(batch, fancy=fancy)[0],
-            rows_in=docs_b.count(),
+            lambda batch=batch: narrow_triples(batch, fancy=fancy),
+            rows_in=lambda b=b: store.rows_out("docs", b),
             sha_check=_triples_doc_check(docs_b),
         )
         if link:
@@ -136,7 +162,7 @@ def run_pipeline(
                     mentions, kg,
                     candidate_types=["FUNCTION", "CLASS", "MODULE"],
                 ),
-                rows_in=mentions.count(),
+                rows_in=mentions.count,
             )
 
     # -------- stage 3 global: canonicalize
@@ -145,11 +171,12 @@ def run_pipeline(
 
     def _canon() -> DataFrame:
         canon, mapping = canonicalize(all_triples.drop("batch"), docs=all_docs)
-        mapping.write.mode("overwrite").parquet(f"{out_root}/state/canonical_map")
+        mapping.write.mode("overwrite").parquet(f"{store.root}/state/canonical_map")
         return canon
 
     canon = store.run_stage(
-        "canonicalize", 0, _canon, rows_in=all_triples.count(),
+        "canonicalize", 0, _canon,
+        rows_in=lambda: store.rows_out("extract"),
         sha_check=_triples_doc_check(all_docs),
     )
 
@@ -159,15 +186,12 @@ def run_pipeline(
             "salt", F.pmod(F.xxhash64("subj"), F.lit(SALT_BUCKETS)).cast("int")
         ).repartition(F.col("pred"), F.col("salt"))
 
-    final = store.run_stage(
+    return store.run_stage(
         "materialize", 0, _materialize,
-        rows_in=canon.count(),
+        rows_in=lambda: store.rows_out("canonicalize", 0),
         sha_check=_triples_doc_check(all_docs),
         partition_cols=["pred"],
     )
-    src.unpersist()
-    source_sha.unpersist()
-    return final
 
 
 def pipeline_metrics(spark: SparkSession, out_root: str) -> DataFrame:

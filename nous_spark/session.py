@@ -11,6 +11,43 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _memory_limit_bytes() -> int:
+    """Memory this process may use: the host's MemTotal, lowered by a
+    cgroup (v2 ``memory.max`` or v1 ``memory.limit_in_bytes``) limit."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/proc/self/cgroup") as f:
+            entries = [line.rstrip("\n").split(":", 2) for line in f]
+    except OSError:
+        return limit
+    for _, controllers, path in entries:
+        if controllers == "":
+            cands = [f"/sys/fs/cgroup{path}/memory.max"]
+        elif "memory" in controllers.split(","):
+            cands = [f"/sys/fs/cgroup/memory{path}/memory.limit_in_bytes"]
+        else:
+            continue
+        for c in cands:
+            try:
+                with open(c) as f:
+                    v = f.read().strip()
+            except OSError:
+                continue
+            if v.isdigit():
+                limit = min(limit, int(v))
+    return limit
+
+
+def default_driver_memory(cores: int) -> str:
+    """``spark.driver.memory`` that fits the host: half of what is left
+    of the memory limit after 1 GiB per Python worker (one per core) and
+    2 GiB for the driver's own Python process and the JVM's off-heap
+    memory; at least 1 GiB, at most 48 GiB."""
+    gib = 1 << 30
+    room = _memory_limit_bytes() - (cores + 2) * gib
+    return f"{max(1, min(48, room // 2 // gib))}g"
+
+
 def get_spark(
     cores: int | None = None,
     app_name: str = "nous_spark",
@@ -22,6 +59,8 @@ def get_spark(
     ``cores=None`` → ``local[*]``. ``shuffle_partitions`` defaults to the
     core count (local mode: more partitions than cores just adds scheduling
     overhead; on a real cluster this is set to 2-3× total executor cores).
+    The driver heap is ``NOUS_DRIVER_MEM`` when set, else
+    ``default_driver_memory(cores)``.
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -44,7 +83,9 @@ def get_spark(
                 os.environ.get("NOUS_MAX_PARTITION_BYTES", "16m"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("NOUS_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("NOUS_DRIVER_MEM")
+                or default_driver_memory(cores))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # ParallelGC: G1 (the JDK default) collapses under many concurrent

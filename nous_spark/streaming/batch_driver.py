@@ -94,7 +94,7 @@ class StreamingPatternMiner:
         self.store.run_stage(
             "instances", batch_id,
             lambda: one_edge_instances(quads, types),
-            rows_in=quads.count(),
+            rows_in=quads.count,
         )
         window_inst = self._window_instances(batch_id)
 

@@ -207,6 +207,24 @@ def test_bgp_distinct_and_errors(spark):
         match_pattern(df, [("a", "knows", "b")])
 
 
+def test_bgp_literals_and_names_are_quoted(spark):
+    """Literal terms and variable names reach the scan as SQL text; quotes,
+    backslashes, backticks and non-ASCII must match exactly."""
+    terms = ["it's", "back\\slash", "\\'", "\\", "''", "日本語", "tab\tnl\n",
+             "a`b", "\\n", "end\\"]
+    df = spark.createDataFrame(
+        [(f"s{i}", "p'q", t) for i, t in enumerate(terms)]
+        + [(t, "p\\", "o") for t in terms],
+        "subj string, pred string, obj string")
+    for i, t in enumerate(terms):
+        assert [r.s for r in match_pattern(
+            df, [("?s", "p'q", t)]).collect()] == [f"s{i}"]
+        assert match_pattern(df, [(t, "p\\", "?o")]).count() == 1
+    assert match_pattern(df, [("?`v", "p\\", "o")]).columns == ["`v"]
+    with pytest.raises(TypeError, match="strings"):
+        match_pattern(df, [("?x", "p", 1)])
+
+
 def test_bgp_null_components_never_bind(spark):
     df = spark.createDataFrame(
         [("a", "knows", None), (None, "knows", "b"), ("a", "knows", "b")],
