@@ -44,12 +44,15 @@ def _sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _sql_str(term) -> str:
-    """A literal pattern term as a Spark SQL string literal (backslash
-    escapes, Spark's default parser setting)."""
-    if not isinstance(term, str):
-        raise TypeError(f"literal pattern terms must be strings, got {term!r}")
-    return "'" + term.replace("\\", "\\\\").replace("'", "\\'") + "'"
+def _sql_str(term) -> str | None:
+    """A literal pattern term as a Spark SQL string literal, or None when
+    the text would depend on the parser (a quote or backslash, read
+    differently under ``spark.sql.parser.escapedStringLiterals``; a
+    ``$``, which variable substitution may rewrite) or the term is not
+    a string: those compare through ``F.lit``."""
+    if not isinstance(term, str) or any(ch in term for ch in "'\\$"):
+        return None
+    return "'" + term + "'"
 
 
 def _expr_vars(expr: str, known: frozenset[str]) -> frozenset[str]:
@@ -142,10 +145,11 @@ def match_pattern(
         if len(pat) != 3:
             raise ValueError(f"pattern must be a 3-tuple, got {pat!r}")
         # One where (the AND of every term condition) and one select per
-        # scan, each given as SQL text: every classic-PySpark DataFrame
-        # call re-analyzes the plan, and every Column expression built
-        # in Python is one more Py4J round trip.
+        # scan, given as SQL text where possible: every classic-PySpark
+        # DataFrame call re-analyzes the plan, and every Column
+        # expression built in Python is one more Py4J round trip.
         conds = []
+        lit_conds = []  # literal terms with no parser-independent text
         n_bound = 0
         var_at: dict[str, list[str]] = {}
         for pos, term in zip(_POS, pat):
@@ -154,7 +158,11 @@ def match_pattern(
                 var_at.setdefault(term[1:], []).append(c)
                 conds.append(f"{c} IS NOT NULL")
             else:
-                conds.append(f"{c} = {_sql_str(term)}")
+                lit = _sql_str(term)
+                if lit is None:
+                    lit_conds.append(F.col(cols[pos]) == F.lit(term))
+                else:
+                    conds.append(f"{c} = {lit}")
                 n_bound += 1
         if not var_at:
             # Fully bound pattern: keep it as an existence filter by
@@ -170,7 +178,12 @@ def match_pattern(
             # same variable twice in one pattern: components must be equal
             conds += [f"{a} = {b}" for a, b in zip(at, at[1:])]
             sel.append(f"{at[0]} AS {_sql_ident(v)}")
-        scan_df = triples.where(" AND ".join(conds)).selectExpr(*sel)
+        cond = " AND ".join(conds)
+        if lit_conds:
+            cond = F.expr(cond)
+            for lc in lit_conds:
+                cond = cond & lc
+        scan_df = triples.where(cond).selectExpr(*sel)
         # scan-level FILTER pushdown: applied at EVERY scan binding all
         # of a filter's variables (a shared variable narrows each side)
         for k, (fexpr, vs) in enumerate(pend):

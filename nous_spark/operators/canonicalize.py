@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from nous_spark.localrel import local_df
 from nous_spark.operators.graph import (
+    DRIVER_EDGE_CAP,
     connected_components,
     min_rank_components,
 )
@@ -87,32 +88,100 @@ def alias_edges_from_code(triples: DataFrame, docs: DataFrame | None = None) -> 
     return resolved.select(F.col("callee").alias("a"), F.col("fq").alias("b"))
 
 
+# Arrow result bytes one collected (a, b) label pair is budgeted at:
+# two labels of up to ~250 UTF-8 bytes plus their offsets. Code labels
+# (qualified names, callee names) run 10-80 bytes.
+LABEL_EDGE_BYTES = 512
+
+
+def label_edge_cap(heap_bytes: int, max_result_bytes: int) -> int:
+    """Most alias edges ``canonical_mapping`` collects as label pairs:
+    half of the smaller of the driver heap and
+    ``spark.driver.maxResultSize`` (0 = unlimited, then the heap alone)
+    at ``LABEL_EDGE_BYTES`` per edge, and never above the long-id
+    ``DRIVER_EDGE_CAP`` of the graph operators."""
+    budget = heap_bytes
+    if max_result_bytes > 0:
+        budget = min(budget, max_result_bytes)
+    return min(DRIVER_EDGE_CAP, budget // 2 // LABEL_EDGE_BYTES)
+
+
+def _session_label_edge_cap(spark: SparkSession) -> int:
+    jvm = spark.sparkContext._jvm
+    max_result = jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(spark.sparkContext.getConf()
+                           .get("spark.driver.maxResultSize", "1g"))
+    return label_edge_cap(jvm.java.lang.Runtime.getRuntime().maxMemory(),
+                          max_result)
+
+
 def canonical_mapping(
-    alias_edges: DataFrame, driver_edge_cap: int = 16_000_000
+    alias_edges: DataFrame,
+    path: str | None = None,
+    driver_edge_cap: int | None = None,
 ) -> DataFrame:
     """label → canonical_label via connected components over the alias
     edges. Canonical representative = longest label in the component
     (ties → lexicographically smallest): fully-qualified names beat
     short names, full names beat aliases. Deterministic → resume-stable.
+    Returns (label, canonical_label, canonical_id).
 
     The edge plan (triples ⋈ docs, calls ⋈ defs, an aggregate) is
-    evaluated ONCE: a bounded Arrow collect of at most
-    ``driver_edge_cap + 1`` edges. Up to the cap, components and
-    representatives are computed on the driver (``min_rank_components``,
-    the kernel of ``connected_components``' own driver path) and the
-    mapping comes back as an Arrow-backed local relation, so the
-    mapping write and ``rewrite_triples`` read it instead of
-    re-evaluating the edges. Python ``str`` order is code-point order,
-    which is Spark's UTF-8 byte order, and ``len`` counts code points
-    like ``F.length`` — so the representative is the distributed
-    path's. Edges with a NULL endpoint carry no alias (``canonicalize``
-    filters them). Above the cap (or with ``driver_edge_cap=0``) the
-    distributed hash-to-min path runs, as ``connected_components``
-    splits by size (parity pinned by tests)."""
-    if driver_edge_cap > 0:
-        tbl = alias_edges.select("a", "b").limit(driver_edge_cap + 1).toArrow()
-        if tbl.num_rows <= driver_edge_cap:
-            return _driver_mapping(alias_edges.sparkSession, tbl)
+    evaluated ONCE: a bounded Arrow collect of at most ``cap + 1``
+    label pairs, where ``cap`` is ``label_edge_cap`` of this driver's
+    heap and ``spark.driver.maxResultSize`` (``driver_edge_cap``
+    overrides it; 0 forces the distributed path). Up to the cap,
+    components (``min_rank_components``, the kernel of
+    ``connected_components``' driver path) and representatives are
+    computed on the driver with Arrow compute: labels sort by their
+    UTF-8 bytes, which is Spark's string order, and ``utf8_length``
+    counts code points like ``F.length`` — so the representative is
+    the distributed path's (parity pinned by tests). Edges with a NULL
+    endpoint carry no alias (``canonicalize`` filters them). Above the
+    cap, after that one bounded collect, the path that reads no labels
+    on the driver runs: ``connected_components`` over xxhash64 ids and
+    a distributed representative pick. Labels averaging well over
+    ``LABEL_EDGE_BYTES / 2`` bytes can overrun
+    ``spark.driver.maxResultSize`` in the probe; raise it for such
+    graphs.
+
+    With ``path`` (a local-filesystem directory), the (label,
+    canonical_label) table is written there as parquet — by pyarrow on
+    the driver path — and the returned frame reads it back, so its
+    consumers never re-evaluate the edges. Without it, a driver-path
+    mapping is an Arrow-backed local relation (fine for small maps;
+    the pipeline passes its state path)."""
+    spark = alias_edges.sparkSession
+    cap = (_session_label_edge_cap(spark) if driver_edge_cap is None
+           else driver_edge_cap)
+    tbl = (alias_edges.select("a", "b").limit(cap + 1).toArrow()
+           if cap > 0 else None)
+    if tbl is not None and tbl.num_rows <= cap:
+        tbl = _driver_mapping(tbl)
+        if path is None:
+            return _with_canonical_id(local_df(
+                spark, zip(*(tbl.column(c).to_pylist()
+                             for c in tbl.column_names)),
+                "label string, canonical_label string"))
+        _write_arrow(tbl, path)
+    else:
+        mapping = _distributed_mapping(alias_edges)
+        if path is None:
+            return _with_canonical_id(mapping)
+        mapping.write.mode("overwrite").parquet(path)
+    return _with_canonical_id(spark.read.parquet(path))
+
+
+def _with_canonical_id(mapping: DataFrame) -> DataFrame:
+    return mapping.select("label", "canonical_label",
+                          F.xxhash64("canonical_label").alias("canonical_id"))
+
+
+def _distributed_mapping(alias_edges: DataFrame) -> DataFrame:
+    """(label, canonical_label) by ``connected_components`` over the
+    xxhash64 ids of the labels (its own size split: a driver pass over
+    long ids up to ``DRIVER_EDGE_CAP``, hash-to-min above) and a
+    distributed representative pick."""
     ids = (
         alias_edges.select(F.col("a").alias("label"))
         .unionAll(alias_edges.select(F.col("b").alias("label")))
@@ -133,39 +202,52 @@ def canonical_mapping(
             )
         )["label"].alias("canonical_label")
     )
-    return (
-        labeled.join(reps, "component")
-        .select("label", "canonical_label",
-                F.xxhash64("canonical_label").alias("canonical_id"))
-    )
+    return labeled.join(reps, "component").select("label", "canonical_label")
 
 
-def _driver_mapping(spark: SparkSession, tbl) -> DataFrame:
-    """``canonical_mapping`` over a collected (a, b) Arrow table."""
+def _driver_mapping(tbl):
+    """(label, canonical_label) Arrow table over a collected (a, b)
+    Arrow table."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     tbl = tbl.drop_null()
-    a = tbl.column("a").to_numpy(zero_copy_only=False)
-    b = tbl.column("b").to_numpy(zero_copy_only=False)
+    a = tbl.column("a").combine_chunks()
+    b = tbl.column("b").combine_chunks()
+    labels = pc.unique(pa.concat_arrays([a, b]))
     # sorted label universe: rank order == label order, so the min rank
     # among the longest labels is the lexicographically smallest one
-    uniq = np.unique(np.concatenate([a, b]))
+    uniq = labels.take(pc.array_sort_indices(labels))
+    n = len(uniq)
     comp = min_rank_components(
-        np.searchsorted(uniq, a), np.searchsorted(uniq, b), len(uniq)
-    )
-    neg_len = -np.fromiter((len(x) for x in uniq), dtype=np.int64,
-                           count=len(uniq))
+        pc.index_in(a, value_set=uniq).to_numpy(zero_copy_only=False),
+        pc.index_in(b, value_set=uniq).to_numpy(zero_copy_only=False), n)
+    neg_len = -pc.utf8_length(uniq).to_numpy(zero_copy_only=False)
     # per component, first in (component, -length, rank) order
-    order = np.lexsort((np.arange(len(uniq)), neg_len, comp))
+    order = np.lexsort((np.arange(n), neg_len, comp))
     comp_o = comp[order]
-    first = np.ones(len(order), dtype=bool)
+    first = np.ones(n, dtype=bool)
     first[1:] = comp_o[1:] != comp_o[:-1]
-    rep = np.empty(len(uniq), dtype=np.int64)
+    rep = np.empty(n, dtype=np.int64)
     rep[comp_o[first]] = order[first]
-    mapping = local_df(spark, zip(uniq, uniq[rep[comp]]),
-                       "label string, canonical_label string")
-    return mapping.select("label", "canonical_label",
-                          F.xxhash64("canonical_label").alias("canonical_id"))
+    return pa.table({"label": uniq.cast(pa.string()),
+                     "canonical_label": uniq.take(rep[comp])
+                     .cast(pa.string())})
+
+
+def _write_arrow(tbl, path: str) -> None:
+    """Overwrite the parquet directory ``path`` with ``tbl``."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    pq.write_table(tbl, os.path.join(path, "part-00000.parquet"),
+                   row_group_size=1 << 17)
+    open(os.path.join(path, "_SUCCESS"), "w").close()
 
 
 def rewrite_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
@@ -192,8 +274,11 @@ def canonicalize(
     triples: DataFrame,
     links: DataFrame | None = None,
     docs: DataFrame | None = None,
+    mapping_path: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full G8 stage: returns (canonical_triples, mapping)."""
+    """Full G8 stage: returns (canonical_triples, mapping). With
+    ``mapping_path`` the mapping is written there and both results read
+    it (``canonical_mapping``'s ``path``)."""
     edges = alias_edges_from_triples(triples).unionByName(
         alias_edges_from_code(triples, docs)
     )
@@ -202,7 +287,7 @@ def canonicalize(
     edges = edges.filter(
         F.col("a").isNotNull() & F.col("b").isNotNull() & (F.col("a") != F.col("b"))
     )
-    mapping = canonical_mapping(edges)
+    mapping = canonical_mapping(edges, path=mapping_path)
     return rewrite_triples(triples, mapping), mapping
 
 

@@ -23,10 +23,12 @@ canonicalize and materialize read it from the upstream stage's lineage
 ``rows_out``. Each invariant check is one aggregate query.
 
 Canonicalize evaluates the alias-edge plan once: ``canonical_mapping``
-collects at most ``driver_edge_cap + 1`` edges with one Arrow collect and,
-at or below the cap, computes the mapping on the driver; the mapping
-write and the triple rewrite then read that small local relation. At this
-size the exchange is the cost, so the plan is chosen by input size.
+collects at most ``cap + 1`` label pairs with one Arrow collect (``cap``
+from the driver heap and ``spark.driver.maxResultSize``) and, at or below
+the cap, computes the mapping on the driver and writes it with pyarrow to
+``state/canonical_map`` (label, canonical_label); the triple rewrite
+reads that file. At this size the exchange is the cost, so the plan is
+chosen by input size.
 
 Scale notes: extraction is embarrassingly parallel per input split; the
 only global barriers are the CC fixpoint above the driver cap (bounded
@@ -170,8 +172,9 @@ def _run(store: StateStore, src: DataFrame, source_sha: DataFrame,
     all_docs = store.read_all_batches("docs").drop("batch")
 
     def _canon() -> DataFrame:
-        canon, mapping = canonicalize(all_triples.drop("batch"), docs=all_docs)
-        mapping.write.mode("overwrite").parquet(f"{store.root}/state/canonical_map")
+        canon, _ = canonicalize(
+            all_triples.drop("batch"), docs=all_docs,
+            mapping_path=f"{store.root}/state/canonical_map")
         return canon
 
     canon = store.run_stage(

@@ -13,15 +13,19 @@ import shutil
 import tempfile
 from collections import Counter
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from nous_spark.corpus import generate_corpus
 from nous_spark.operators.canonicalize import (
+    LABEL_EDGE_BYTES,
     SAMEAS_PREDICATES,
     canonical_mapping,
+    label_edge_cap,
 )
+from nous_spark.operators.graph import DRIVER_EDGE_CAP, min_rank_components
 from nous_spark.plans.lineage import StateStore
 from nous_spark.plans.pipeline import run_pipeline
 
@@ -46,16 +50,66 @@ def _mapping_rows(df):
     [("é", "e"), ("ß", "sz"), ("日本", "ab"), ("Ωa", "zb"), ("zb", "ÿa"),
      ("ab", "日本語")],
 ])
-def test_canonical_mapping_driver_matches_distributed(spark, edges):
+def test_canonical_mapping_driver_matches_distributed(spark, edges, tmp_path):
     df = spark.createDataFrame(edges, "a string, b string")
     driver = _mapping_rows(canonical_mapping(df))
     assert driver == _mapping_rows(canonical_mapping(df, driver_edge_cap=0))
+    # more edges than the cap: the probe collect falls through to the
+    # distributed path
+    assert len(edges) > 3
+    assert driver == _mapping_rows(canonical_mapping(df, driver_edge_cap=3))
     assert len(driver) == len({x for e in edges for x in e})
+    # with a path, both paths write (label, canonical_label) there and
+    # read it back
+    for cap, d in ((None, "driver"), (3, "distributed")):
+        path = str(tmp_path / d)
+        assert driver == _mapping_rows(
+            canonical_mapping(df, path=path, driver_edge_cap=cap))
+        on_disk = spark.read.parquet(path)
+        assert on_disk.columns == ["label", "canonical_label"]
+        assert on_disk.count() == len(driver)
 
 
-def test_canonical_mapping_empty(spark):
+def test_canonical_mapping_empty(spark, tmp_path):
     df = spark.createDataFrame([], "a string, b string")
     assert canonical_mapping(df).collect() == []
+    assert canonical_mapping(df, path=str(tmp_path / "m")).collect() == []
+
+
+def test_min_rank_components_matches_union_find():
+    """The shared driver kernel against a Python union-find, on random
+    graphs and on a long path in random rank order (the shape where
+    relabelling endpoints needs one round per hop)."""
+    rng = np.random.default_rng(3)
+    cases = [(int(n), rng.integers(0, n, m), rng.integers(0, n, m))
+             for n, m in ((1, 0), (50, 20), (300, 250), (2000, 3000))]
+    perm = rng.permutation(20_000)
+    cases.append((20_000, perm[:-1], perm[1:]))
+    for n, ua, va in cases:
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for u, v in zip(ua.tolist(), va.tolist()):
+            ru, rv = find(u), find(v)
+            parent[max(ru, rv)] = min(ru, rv)
+        want = [find(x) for x in range(n)]
+        assert min_rank_components(ua, va, n).tolist() == want
+
+
+def test_label_edge_cap():
+    gib = 1 << 30
+    # half of the smaller budget at LABEL_EDGE_BYTES per edge
+    assert label_edge_cap(4 * gib, gib) == gib // 2 // LABEL_EDGE_BYTES
+    assert label_edge_cap(gib, 4 * gib) == gib // 2 // LABEL_EDGE_BYTES
+    # maxResultSize 0 is unlimited: the heap alone bounds the collect
+    assert label_edge_cap(2 * gib, 0) == gib // LABEL_EDGE_BYTES
+    # never above the long-id cap of the graph operators
+    assert label_edge_cap(1 << 50, 0) == DRIVER_EDGE_CAP
 
 
 # ---------------------------------------------------------------------------

@@ -208,10 +208,11 @@ def test_bgp_distinct_and_errors(spark):
 
 
 def test_bgp_literals_and_names_are_quoted(spark):
-    """Literal terms and variable names reach the scan as SQL text; quotes,
-    backslashes, backticks and non-ASCII must match exactly."""
+    """Literal terms and variable names reach the scan as SQL text or, for
+    quotes, backslashes and non-string terms, as ``F.lit``; every one must
+    match exactly."""
     terms = ["it's", "back\\slash", "\\'", "\\", "''", "日本語", "tab\tnl\n",
-             "a`b", "\\n", "end\\"]
+             "a`b", "\\n", "end\\", "${spark.app.name}"]
     df = spark.createDataFrame(
         [(f"s{i}", "p'q", t) for i, t in enumerate(terms)]
         + [(t, "p\\", "o") for t in terms],
@@ -221,8 +222,10 @@ def test_bgp_literals_and_names_are_quoted(spark):
             df, [("?s", "p'q", t)]).collect()] == [f"s{i}"]
         assert match_pattern(df, [(t, "p\\", "?o")]).count() == 1
     assert match_pattern(df, [("?`v", "p\\", "o")]).columns == ["`v"]
-    with pytest.raises(TypeError, match="strings"):
-        match_pattern(df, [("?x", "p", 1)])
+    nums = spark.createDataFrame([("a", "p", 1), ("b", "p", 2)],
+                                 "subj string, pred string, obj long")
+    assert [r.x for r in match_pattern(nums, [("?x", "p", 2)]).collect()] \
+        == ["b"]
 
 
 def test_bgp_null_components_never_bind(spark):
