@@ -154,10 +154,10 @@ def canonical_mapping(
     spark = alias_edges.sparkSession
     cap = (_session_label_edge_cap(spark) if driver_edge_cap is None
            else driver_edge_cap)
-    tbl = (alias_edges.select("a", "b").limit(cap + 1).toArrow()
-           if cap > 0 else None)
-    if tbl is not None and tbl.num_rows <= cap:
-        tbl = _driver_mapping(tbl)
+    probe = (alias_edges.select("a", "b").limit(cap + 1).toArrow()
+             if cap > 0 else None)
+    if probe is not None and probe.num_rows <= cap:
+        tbl = _driver_mapping(probe)
         if path is None:
             return _with_canonical_id(local_df(
                 spark, zip(*(tbl.column(c).to_pylist()
